@@ -747,7 +747,7 @@ object Dedup {
     // orders of magnitude smaller than the corpus that produced it —
     // that per-round planning latency dominates the actual work
     // (measured: 2.2 s/round with AQE vs 0.5-0.9 s/round without, same
-    // plan shapes, CcProbe). The loop's joins are uniform id-keyed hash
+    // plan shapes). The loop's joins are uniform id-keyed hash
     // joins with stable per-round statistics, exactly the case static
     // planning handles; near-dup-graph skew shows up as big components
     // (handled by pointer doubling), not as hot shuffle keys.

@@ -477,6 +477,27 @@ object Artifacts {
   private val dfCache = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.Map[(String, Seq[String]), DataFrame]]()
 
+  /** Delete segment dir `seg` of artifact `name` and drop every
+    * [[readSegs]] memo entry (in any session) that lists it. The memo
+    * must not outlive the files: once the dir is gone [[nextSegNo]]
+    * can hand the same `seg=N` to a later writer, and a memo hit on
+    * the old key would serve the deleted segment's listing and schema
+    * instead of the new rows.
+    */
+  private def deleteSegment(f: FileSystem, idx: String, name: String,
+      seg: String): Unit = {
+    f.delete(new Path(s"$idx/$name/$seg"), true)
+    val root = s"$idx/$name"
+    import scala.jdk.CollectionConverters._
+    val memos = dfCache.synchronized(dfCache.values().asScala.toList)
+    memos.foreach { m =>
+      m.synchronized {
+        m.keys.filter(k => k._1 == root && k._2.contains(seg)).toList
+          .foreach(m -= _)
+      }
+    }
+  }
+
   /** Driver-side collect of a CATALOG-SIZED artifact (stats, summary,
     * graph_meta, centroids, codebooks, sq8 ranges, radii — frames
     * bounded by construction at k·dims / m·k·sub / key-value rows,
@@ -1356,7 +1377,7 @@ object Artifacts {
       val f0 = fs(spark, idx)
       finished.foreach { case (n, ss) =>
         ss.diff(withDeltas.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
+          deleteSegment(f0, idx, n, s)
         }
       }
       val now = currentVersion(spark, idx)
@@ -1413,7 +1434,7 @@ object Artifacts {
           prev.foreach { case (n, ss) =>
             ss.filterNot(s => refs((n, s)) ||
               keep.getOrElse(n, Seq.empty).contains(s)).foreach { s =>
-              f0.delete(new Path(s"$idx/$n/$s"), true)
+              deleteSegment(f0, idx, n, s)
             }
           }
         }
@@ -1516,7 +1537,7 @@ object Artifacts {
       // next attempt's whole point)
       finished.foreach { case (n, ss) =>
         ss.diff(merged.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
+          deleteSegment(f0, idx, n, s)
         }
       }
     }
@@ -1579,7 +1600,7 @@ object Artifacts {
       // lost: reclaim only finish-created segments; `pend` is reused
       finished.foreach { case (n, ss) =>
         ss.diff(merged.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
+          deleteSegment(f0, idx, n, s)
         }
       }
     }
@@ -1901,7 +1922,7 @@ object Artifacts {
             // past the grace age (could be a live writer's pending
             // work), aged by the writer stamp when one exists
             if (graveyard(key) || agedByWriter(seg, segNoOf(nm)))
-              f.delete(seg, true)
+              deleteSegment(f, idx, ad.getName, nm)
           }
         }
       }

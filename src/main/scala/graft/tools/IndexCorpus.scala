@@ -102,57 +102,17 @@ import graft.ops.SemDedup
   *   runMain graft.tools.IndexCorpus fsck <indexDir>
   *   runMain graft.tools.IndexCorpus contention <indexDir>
   *
-  * Every mutating command accepts `--keep-manifests N` (sets
-  * `spark.graft.keepManifests` for the session): the vacuum retention
-  * window external concurrent readers pin against ([[Artifacts]]),
-  * and `--vacuum-grace-ms MS` (the age below which vacuum presumes a
-  * never-referenced segment belongs to a live CONCURRENT writer —
-  * see the multi-writer contract in [[Artifacts]]'s object doc).
-  * `search`/`searchBatch --at V` is the TIME-TRAVEL read over that
-  * window: every artifact resolves against retained manifest V, so
-  * post-V deletes/updates are invisible, exactly (q301 proves it with
-  * the full-corpus sq8 oracle through a post-delete index).
+  * The lifecycle shells (`delete`, `compact`, `history`, `fsck`,
+  * `contention`, `export`, `--at`, the retention flags) are
+  * [[IndexLifecycle]]'s; this object supplies the vector pieces.
   */
-object IndexCorpus {
+object IndexCorpus extends IndexLifecycle {
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-index")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      args.headOption match {
-        case Some("build")   => build(spark, args.drop(1))
-        case Some("update")  => update(spark, args.drop(1))
-        case Some("delete")  => delete(spark, args.drop(1))
-        case Some("compact") => compact(spark, args.drop(1))
-        case Some("graph")   => graph(spark, args.drop(1))
-        case Some("search") =>
-          search(spark, args.drop(1)).show(100, truncate = false)
-        case Some("searchBatch") =>
-          searchBatch(spark, args.drop(1)).show(100, truncate = false)
-        case Some("history") =>
-          history(spark, args.drop(1)).show(100, truncate = false)
-        case Some("export") => export(spark, args.drop(1))
-        case Some("fsck") =>
-          fsck(spark, args.drop(1)).show(100, truncate = false)
-        case Some("contention") =>
-          contention(spark, args.drop(1)).show(100, truncate = false)
-        case _ =>
-          sys.error("usage: IndexCorpus build|update|delete|compact|" +
-            "graph|search|searchBatch|history|export|fsck|contention ...")
-      }
-    } finally spark.stop()
-  }
-
-  private def flagsOf(args: Array[String], from: Int): Map[String, String] =
-    args.drop(from).sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  protected val cliName = "IndexCorpus"
+  protected val appName = "graft-index"
+  protected val idDefault = "vec_id"
+  protected val membership = "assignments"
+  override protected val extraCommands = Seq("graph" -> (graph _))
 
   /** The membership artifacts' partition key is a BOUNDED bucket of
     * the IVF cell — `cb = pmod(cell, 64)` — with `cell` kept as a
@@ -231,152 +191,35 @@ object IndexCorpus {
   private def summaryFlag(spark: SparkSession, idx: String,
       key: String): Boolean = summaryVal(spark, idx, key).contains(1L)
 
-  private def refresh(spark: SparkSession, idx: String): Unit =
-    spark.catalog.refreshByPath(idx)
-
-  /** Retract vectors from the index. Same contract as
-    * [[LexIndex.delete]]: a TOMBSTONE append (O(deleted) — a delete
-    * wave must never repay the build), honored by [[search]] via an
-    * anti-join on the cell-restricted candidates, so post-delete
-    * answers equal a fresh build over the survivors fed the SAME
-    * frozen model (the router and codebooks never retrain on delete)
-    * — the q273 driver row proves it. Ids not present (or already
-    * deleted) are ignored; re-ingesting a tombstoned id via
-    * [[update]] is rejected permanently (IndexCorpusSpec exercises
-    * the resurrection rule before and after compact).
+  /** compact, vector arm: the membership artifacts (assignments,
+    * pq_codes, sq8_codes, knn_graph) rewrite without the deleted ids;
+    * the model artifacts (centroids, codebooks, sq8 ranges, summary)
+    * are untouched — compaction is a membership rewrite, never a
+    * retrain. knn_graph rewrites with the bucket count it was WRITTEN
+    * with (graph_meta's gbuckets), like cellBucketsOf does for cb — a
+    * compact must never silently re-partition the graph while
+    * graph_meta still advertises the old count.
     */
-  def delete(spark: SparkSession, args: Array[String]): Seq[(String, Long)] = {
-    require(args.length >= 2, "usage: delete <indexDir> <ids.parquet> [flags]")
-    val (idx, in) = (args(0), args(1))
-    val flags = flagsOf(args, 2)
-    val idCol = flags.getOrElse("id", "vec_id")
-    GraftSession.tune(spark)
-    Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
-    // structural command: derived against one snapshot; a competing
-    // commit CAS-fails the publish and the derivation re-runs from
-    // the merged state, bounded times (commitStructuralWithRetry).
-    // Audited round 16 for the derive-once treatment the graph build
-    // got: UNLIKE the build, this derivation is genuinely
-    // base-DEPENDENT (the doomed set is the input anti-joined against
-    // the LIVE membership, which every competing commit can change)
-    // and its retry cost is one pruned id-column scan + a wave-sized
-    // semi-join — metadata-class, not corpus-class. Re-deriving is
-    // both required and cheap; no delta-rebase applies.
-    var nDel = 0L
-    Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
-      val live0 = Artifacts.read(spark, idx, "assignments").select(col("id"))
-      val live =
-        if (Artifacts.exists(spark, idx, "tombstones"))
-          live0.join(Artifacts.read(spark, idx, "tombstones"),
-            Seq("id"), "left_anti")
-        else live0
-      val doomed = graft.Scratch.localCheckpoint(
-        spark.read.parquet(in).select(col(idCol).cast("long").as("id"))
-          .distinct()
-          .join(live, Seq("id"), "left_semi"))
-      // counted write (round 17): the deleted-row count rides the
-      // tombstone write instead of a separate pre-write count job
-      val (segT, n, _) = Artifacts.writeSegmentCounted(
-        spark, idx, "tombstones", doomed)
-      nDel = n
-      val pend = Map("tombstones" ->
-        (Artifacts.segmentsOf(spark, idx, "tombstones") :+ segT))
-      Artifacts.merged(spark, idx, pend)
-    }
-    Artifacts.vacuum(spark, idx)
-    refresh(spark, idx)
-    Seq("deleted" -> nDel)
-  }
-
-  /** Fold the tombstones into the membership artifacts: rewrite
-    * assignments / pq_codes / sq8_codes without the deleted ids (an
-    * anti-join against the SMALL tombstone set), per-cell-partitioned
-    * rewrite segments replacing what they compact via one atomic
-    * manifest flip — compact never overwrites the files it reads
-    * (crash mid-compact = prior index intact; the spec's failpoint
-    * proves it). The model artifacts (centroids, codebooks, sq8
-    * ranges, summary) are untouched — compaction is a membership
-    * rewrite, never a retrain. The tombstone set SURVIVES (distinct)
-    * as the permanent retraction artifact, so a post-compact update
-    * still rejects retracted ids.
-    *
-    * `--threshold <permille>` compacts INCREMENTALLY (the
-    * [[Artifacts.compactSegments]] kernel): only segments whose
-    * tombstone-hit density crosses the threshold rewrite; cold
-    * segments' files stay untouched, so compact cost tracks where the
-    * deletes landed, not the index size. Answers are unchanged either
-    * way (search already honored the tombstones) — q273/q285 pin it
-    * against survivor-restricted oracles.
-    */
-  def compact(spark: SparkSession, args: Array[String]): Seq[(String, Long)] =
-    compactImpl(spark, args, crashBeforeCommit = false)
-
-  private[tools] def compactImpl(spark: SparkSession, args: Array[String],
-      crashBeforeCommit: Boolean): Seq[(String, Long)] = {
-    require(args.length >= 1, "usage: compact <indexDir> [flags]")
-    val idx = args(0)
-    val flags = flagsOf(args, 1)
-    val thresholdPm = flags.get("threshold").map(_.toLong)
-    GraftSession.tune(spark)
-    Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
-    refresh(spark, idx)
-    // structural command: the rewrite is derived from THIS snapshot
-    // (see LexIndex.compactImpl's ingest-vs-compact race note)
-    // DELTA-REBASE compact (round 15; see LexIndex.compactImpl's
-    // note): the membership consolidation derives ONCE from the base
-    // manifest's segment lists; a lost CAS race merges the
-    // consolidated segments with competitors' appends-since-base
-    // (ingest waves' membership/radii appends stay valid
-    // unconsolidated) instead of re-deriving the corpus-sized rewrite
-    val baseMap = Artifacts.currentManifest(spark, idx)
-      .map(_._2).getOrElse(Map.empty)
-    var pend = Map.empty[String, Seq[String]]
-    val tomb =
-      if (baseMap.get("tombstones").exists(_.nonEmpty))
-        Some(graft.Scratch.cache(
-          Artifacts.readSegs(spark, idx, "tombstones", baseMap("tombstones"))
-            .select(col("id")).distinct()))
-      else None
+  protected def compactPlan(spark: SparkSession, idx: String,
+      thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])] = {
     val cb = cellBucket(cellBucketsOf(spark, idx))
-    // knn_graph rewrites with the bucket count it was WRITTEN with
-    // (graph_meta's gbuckets), like cellBucketsOf does for cb — a
-    // compact must never silently re-partition the graph while
-    // graph_meta still advertises the old count
-    Seq(("assignments", cb), ("pq_codes", cb),
-      ("sq8_codes", cb),
-      ("knn_graph", graphBucket(graphBucketsOf(spark, idx))))
-      .foreach { case (name, bucket) =>
-        Artifacts.compactSegments(spark, idx, name, tomb, thresholdPm,
-          filtered = true, bucket,
-          baseSegs = Some(baseMap.getOrElse(name, Seq.empty)))
-          .foreach(segs => pend += name -> segs)
-      }
-    // radii are CELL-keyed, so the tombstone anti-join does not apply
-    // — fold the appended per-ingest maxes to one row per cell. Post-
-    // delete radii may overestimate (max over fewer members), which
-    // only weakens the exact tier's pruning, never its answers.
-    if (baseMap.get("ivf_radii").exists(_.nonEmpty))
-      pend = Artifacts.withReplaced(spark, idx, pend, "ivf_radii",
-        Artifacts.readSegs(spark, idx, "ivf_radii", baseMap("ivf_radii"))
-          .groupBy(col("cell")).agg(max(col("r2")).as("r2")))
-    tomb.foreach { ts =>
-      pend = Artifacts.withReplaced(spark, idx, pend, "tombstones", ts)
-    }
-    if (crashBeforeCommit)
-      sys.error("injected crash: compact before manifest commit")
-    Artifacts.commitRewriteWithDeltaRetry(spark, idx, baseMap, pend)
-    Artifacts.vacuum(spark, idx)
-    refresh(spark, idx)
-    // post-compact per-artifact sizes from parquet FOOTERS (round 18,
-    // VERDICT item 3): the previous read-back count() re-scanned every
-    // artifact the compact had just rewritten — the exact second-pass
-    // pattern round 17 eliminated from the build paths
-    pend.keys.toSeq.sorted.map { name =>
-      name -> Artifacts.countRows(spark, idx, name)
-    }
+    Seq(("assignments", true, cb), ("pq_codes", true, cb),
+      ("sq8_codes", true, cb),
+      ("knn_graph", true, graphBucket(graphBucketsOf(spark, idx))))
   }
+
+  /** Radii are CELL-keyed, so the tombstone anti-join does not apply —
+    * fold the appended per-ingest maxes to one row per cell. Post-
+    * delete radii may overestimate (max over fewer members), which
+    * only weakens the exact tier's pruning, never its answers.
+    */
+  override protected def compactExtra(spark: SparkSession, idx: String,
+      baseMap: Map[String, Seq[String]],
+      pend: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    if (!baseMap.get("ivf_radii").exists(_.nonEmpty)) pend
+    else Artifacts.withReplaced(spark, idx, pend, "ivf_radii",
+      Artifacts.readSegs(spark, idx, "ivf_radii", baseMap("ivf_radii"))
+        .groupBy(col("cell")).agg(max(col("r2")).as("r2")))
 
   /** Build the index artifacts; returns (artifact, rows) per write.
     * `--residual true` quantizes each vector's RESIDUAL against its
@@ -687,38 +530,23 @@ object IndexCorpus {
     n
   }
 
-  /** Per-version membership statistics over the RETAINED manifest
-    * chain: (version, vectors, tombstones, live) — each version read
-    * through `Artifacts.withPinned`, so a row is exactly the state a
-    * `search --at version` serves from (`vectors` counts assignment
-    * rows, which keep dead entries until a compact folds the
-    * tombstones in; `live` is the anti-joined serving population).
+  /** history: per-version membership statistics (vectors, tombstones,
+    * live) — each version's segment lists resolved via manifestAt, so
+    * a row is exactly the state a `search --at version` serves from
+    * (`vectors` counts assignment rows, which keep dead entries until a
+    * compact folds the tombstones in; `live` is the anti-joined
+    * serving population).
+    *
+    * ONE Spark job for the whole chain: every version's counts ride
+    * tagged branches of a single union-aggregate keyed by version.
+    * The left_outer join is row-preserving because the tombstone
+    * branch is made distinct first, so `live` (no tombstone match)
+    * equals an anti-join count.
     */
-  def history(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: history <indexDir>")
-    val idx = args(0)
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
-    import spark.implicits._
-    // the layer-level version chain (bounded by the retention window)
-    // drives which snapshots get a stats row; segment lists resolve
-    // per version via manifestAt — the same resolution withPinned
-    // gave, without the conf round-trips
-    val chain = Artifacts.manifestVersions(spark, idx)
-    // starvation-risk columns (round 17): contention events that
-    // landed at each version + the worst lost-attempt count — in the
-    // audit an operator actually runs, not only under `contention`
-    val cont = Artifacts.contentionByVersion(spark, idx)
-    // ONE Spark job for the whole chain (round 18, VERDICT item 4):
-    // every version's (vectors, tombstones, live) counts ride tagged
-    // branches of a single union-aggregate keyed by version — the
-    // previous shape scheduled up to THREE count jobs PER VERSION
-    // (assignment count, tombstone count, live anti-join count). The
-    // left_outer join is row-preserving because the tombstone branch
-    // is made distinct first, so `live` (no tombstone match) equals
-    // the old anti-join count exactly.
-    val branches: Seq[org.apache.spark.sql.DataFrame] = chain.flatMap { v =>
+  protected val historyColumns = ("vectors", "tombstones", "live")
+  protected def historyStats(spark: SparkSession, idx: String,
+      chain: Seq[Long]): Long => (Long, Long, Long) = {
+    val branches: Seq[DataFrame] = chain.flatMap { v =>
       val m = Artifacts.manifestAt(spark, idx, v)
       val asgn = Artifacts.readSegs(spark, idx, "assignments",
         m.getOrElse("assignments", Seq.empty)).select(col("id"))
@@ -745,129 +573,54 @@ object IndexCorpus {
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
-    chain.map { v =>
-      val (nVec, nTomb, nLive) = counts.getOrElse(v, (0L, 0L, 0L))
-      val (ev, worst) = cont.getOrElse(v, (0L, 0L))
-      (v, nVec, nTomb, nLive, ev, worst)
-    }.toDF("version", "vectors", "tombstones", "live",
-      "contention_events", "max_lost_attempts")
+    v => counts.getOrElse(v, (0L, 0L, 0L))
   }
 
-  /** Index INTEGRITY audit (`fsck <indexDir>`), the vector arm of
-    * LexIndex.fsck: (invariant, observed, expected) rows over the
-    * invariants the ANN serving contract rests on — healthy means
-    * observed == expected everywhere.
+  /** fsck, vector arm — the invariants the ANN serving contract rests
+    * on:
     *
-    *   - segments_missing: manifest-listed dirs absent on disk.
-    *   - assignment_dupes: ids with more than one assignment row
-    *     (the ingest dedup contract — a dupe double-counts ADC mass).
-    *   - codes_incomplete: assigned ids whose pq_codes rows don't
-    *     cover all pq_m subspaces exactly once.
-    *   - codes_orphans: pq_codes ids with no assignment row (an
-    *     encode that outlived its membership).
+    *   - assignment_dupes: ids with more than one assignment row (the
+    *     ingest dedup contract — a dupe double-counts ADC mass);
     *   - codes_cell_mismatch: pq_codes rows whose denormalized cell
     *     disagrees with the assignment (the probed-cell restriction
-    *     would silently skip or mis-route them).
-    *
-    * Checks run over ALL rows including tombstoned ones (assignments
-    * and codes carry dead rows symmetrically until compact). q308
-    * drives the full lifecycle and hashes every row against the
-    * closed-form corpus recount.
+    *     would silently skip or mis-route them);
+    *   - codes_incomplete: assigned ids whose pq_codes rows don't
+    *     cover all pq_m subspaces exactly once;
+    *   - codes_orphans: pq_codes ids with no assignment row (an encode
+    *     that outlived its membership).
     */
-  def fsck(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: fsck <indexDir>")
-    val idx = args(0)
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
-    import spark.implicits._
-    val (_, missing) = Artifacts.segmentCheck(spark, idx)
-    // value checks read the content artifacts — uncomputable when the
-    // manifest references lost files ((-1, 0) then; segments_missing
-    // carries the diagnosis)
-    val valueRows: Seq[(String, Long, Long)] =
-      try {
-        val pqM = summaryVal(spark, idx, "pq_m").getOrElse(2L)
-        val asgn = graft.Scratch.cache(
-          Artifacts.read(spark, idx, "assignments")
-            .select(col("id"), col("cell")))
-        val codes = graft.Scratch.cache(
-          Artifacts.read(spark, idx, "pq_codes")
-            .select(col("id"), col("s"), col("cell").as("code_cell")))
-        // ALL FOUR invariant counts in ONE job (round 18): tagged
-        // branches under a single union-aggregate replace four
-        // separate count jobs per fsck — same joins, same caches,
-        // one job floor instead of four
-        val audit = asgn.groupBy(col("id")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1)
-          .select(lit("dup").as("inv"))
-          .unionByName(asgn.select(col("id"))
-            .join(codes.groupBy(col("id"))
-              .agg(count_distinct(col("s")).as("m"),
-                count(lit(1)).as("rows")),
-              Seq("id"), "left_outer")
-            .filter(col("m").isNull || col("m") =!= pqM ||
-              col("rows") =!= pqM)
-            .select(lit("inc").as("inv")))
-          .unionByName(codes.select(col("id")).distinct()
-            .join(asgn.select(col("id")), Seq("id"), "left_anti")
-            .select(lit("orp").as("inv")))
-          .unionByName(codes
-            .join(asgn, Seq("id"), "inner")
-            .filter(col("code_cell") =!= col("cell"))
-            .select(lit("mis").as("inv")))
-          .groupBy(col("inv")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        Seq(
-          ("assignment_dupes", audit.getOrElse("dup", 0L), 0L),
-          ("codes_cell_mismatch", audit.getOrElse("mis", 0L), 0L),
-          ("codes_incomplete", audit.getOrElse("inc", 0L), 0L),
-          ("codes_orphans", audit.getOrElse("orp", 0L), 0L))
-      } catch {
-        case _: Throwable if missing > 0 =>
-          Seq("assignment_dupes", "codes_cell_mismatch",
-            "codes_incomplete", "codes_orphans").map((_, -1L, 0L))
-      }
-    // strands read the telemetry files alone — computable even when
-    // content artifacts are lost, so they sit outside the try
-    val strands = Artifacts.contentionStrands(spark, idx)
-    (("segments_missing", missing, 0L) +:
-      ("contention_strands", strands, 0L) +: valueRows)
-      .toDF("invariant", "observed", "expected")
-      .orderBy(col("invariant"))
-  }
-
-  /** Commit-contention telemetry (`contention <indexDir>`): one row
-    * per recorded lost-CAS event — (command, lost_attempts,
-    * landed_version; -1 = the command exhausted its retries and
-    * stranded). Makes write contention OBSERVABLE before a structural
-    * command actually starves: a deployment whose compacts routinely
-    * land at 3-4 lost attempts is one ingest wave away from a strand
-    * and should widen `spark.graft.structuralRetries` or schedule
-    * compacts off-peak. Bounded by construction (vacuum retains the
-    * newest [[Artifacts.contentionKeep]] events).
-    */
-  def contention(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: contention <indexDir>")
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, args(0))
-    Artifacts.contentionReport(spark, args(0))
-  }
-
-  /** Materialize a (possibly historical) snapshot as a brand-new
-    * standalone index — `export <src> <dst> [--at V]`; see
-    * [[Artifacts.exportSnapshot]]. q306 proves a pre-delete export
-    * serves the full-corpus sq8 oracle through a post-delete source.
-    */
-  def export(spark: SparkSession, args: Array[String]): Seq[(String, Long)] = {
-    require(args.length >= 2, "usage: export <srcIndexDir> <dstIndexDir> [--at V]")
-    val flags = flagsOf(args, 2)
-    GraftSession.tune(spark)
-    val res = Artifacts.exportSnapshot(spark, args(0), args(1),
-      flags.get("at").map(_.toLong))
-    refresh(spark, args(1))
-    res
+  protected val fsckInvariants = Seq("assignment_dupes",
+    "codes_cell_mismatch", "codes_incomplete", "codes_orphans")
+  protected def fsckValues(spark: SparkSession, idx: String)
+      : Seq[(Long, Long)] = {
+    val pqM = summaryVal(spark, idx, "pq_m").getOrElse(2L)
+    val asgn = graft.Scratch.cache(
+      Artifacts.read(spark, idx, "assignments")
+        .select(col("id"), col("cell")))
+    val codes = graft.Scratch.cache(
+      Artifacts.read(spark, idx, "pq_codes")
+        .select(col("id"), col("s"), col("cell").as("code_cell")))
+    val one = lit(1L).as("v")
+    val a = audit(asgn.groupBy(col("id")).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1)
+      .select(lit("dup").as("inv"), one)
+      .unionByName(asgn.select(col("id"))
+        .join(codes.groupBy(col("id"))
+          .agg(count_distinct(col("s")).as("m"),
+            count(lit(1)).as("rows")),
+          Seq("id"), "left_outer")
+        .filter(col("m").isNull || col("m") =!= pqM ||
+          col("rows") =!= pqM)
+        .select(lit("inc").as("inv"), one))
+      .unionByName(codes.select(col("id")).distinct()
+        .join(asgn.select(col("id")), Seq("id"), "left_anti")
+        .select(lit("orp").as("inv"), one))
+      .unionByName(codes
+        .join(asgn, Seq("id"), "inner")
+        .filter(col("code_cell") =!= col("cell"))
+        .select(lit("mis").as("inv"), one)))
+      .withDefaultValue(0L)
+    Seq("dup", "mis", "inc", "orp").map(t => (a(t), 0L))
   }
 
   /** cell -> centroid long array, from the persisted frame
@@ -1228,11 +981,7 @@ object IndexCorpus {
     */
   def search(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 3, "usage: search <indexDir> <emb.parquet> <probeId> [flags]")
-    flagsOf(args, 3).get("at") match {
-      case Some(v) => // time-travel: resolve every artifact at manifest v
-        Artifacts.withPinned(spark, args(0), v.toLong)(searchImpl(spark, args))
-      case None => searchImpl(spark, args)
-    }
+    atVersion(spark, args, 3)(searchImpl(spark, args))
   }
 
   private def searchImpl(spark: SparkSession, args: Array[String]): DataFrame = {
@@ -1297,11 +1046,7 @@ object IndexCorpus {
         val m0 = restrictCells(
           Artifacts.read(spark, idx, "assignments"), cellIds, cbN)
           .filter(col("id") =!= probeId)
-        val m =
-          if (Artifacts.exists(spark, idx, "tombstones"))
-            m0.join(Artifacts.read(spark, idx, "tombstones")
-              .select(col("id")), Seq("id"), "left_anti")
-          else m0
+        val m = dropTombstoned(spark, idx, m0)
         spark.read.parquet(in).filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("id"),
             SemDedup.microsVec(col(vecCol)).as("mv"))
@@ -1490,12 +1235,7 @@ object IndexCorpus {
       .filter(col("id") =!= probeId)
     // retraction: tombstoned ids must not surface — the anti-join
     // runs on the CELL-RESTRICTED candidates, never the whole index
-    val members0 =
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        membersAll.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
-          Seq("id"), "left_anti")
-      else membersAll
+    val members0 = dropTombstoned(spark, idx, membersAll)
     // pre-filter INSIDE the probed cells: cell restriction and the
     // stratum predicate reach the same scan
     val members = filterSql.fold(members0)(f => members0.filter(expr(f)))
@@ -1601,12 +1341,7 @@ object IndexCorpus {
   def searchBatch(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 3,
       "usage: searchBatch <indexDir> <emb.parquet> <probes.parquet> [flags]")
-    flagsOf(args, 3).get("at") match {
-      case Some(v) =>
-        Artifacts.withPinned(spark, args(0), v.toLong)(
-          searchBatchImpl(spark, args, None))
-      case None => searchBatchImpl(spark, args, None)
-    }
+    atVersion(spark, args, 3)(searchBatchImpl(spark, args, None))
   }
 
   /** [[searchBatch]] with the probe frame passed DIRECTLY instead of
@@ -1622,12 +1357,7 @@ object IndexCorpus {
     require(args.length >= 2,
       "usage: searchBatchFrame <indexDir> <emb.parquet> [flags] + frame")
     val full = args.take(2) ++ Array("__probe_frame__") ++ args.drop(2)
-    flagsOf(args, 2).get("at") match {
-      case Some(v) =>
-        Artifacts.withPinned(spark, args(0), v.toLong)(
-          searchBatchImpl(spark, full, Some(probes)))
-      case None => searchBatchImpl(spark, full, Some(probes))
-    }
+    atVersion(spark, args, 2)(searchBatchImpl(spark, full, Some(probes)))
   }
 
   private def searchBatchImpl(spark: SparkSession,
@@ -1709,12 +1439,7 @@ object IndexCorpus {
     val membersAll = restrictCells(
       Artifacts.read(spark, idx, "assignments"),
       probedCells.map(Long.unbox), cbN)
-    val members0 =
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        membersAll.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
-          Seq("id"), "left_anti")
-      else membersAll
+    val members0 = dropTombstoned(spark, idx, membersAll)
     // candidates: a probe meets exactly its OWN probed cells' members;
     // --filter PRE-filters inside the probed cells (the single-probe
     // contract — a probed-cell stratum member is never lost to the

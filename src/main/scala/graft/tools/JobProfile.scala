@@ -53,9 +53,8 @@ object JobProfile {
             .getOrElse("?")
           // the SQL execution id groups an action's root job with the
           // broadcast/subquery child jobs its execution spawned on the
-          // SQL thread pool — those children report a useless
-          // CompletableFuture call site, so the rollup re-attributes
-          // them to the first same-execution job with a real site
+          // SQL thread pool — the rollup re-attributes every later job
+          // of an execution to the first job of that execution
           val execId = Option(e.properties)
             .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
             .getOrElse("")
@@ -108,17 +107,19 @@ object JobProfile {
         .foreach { case (s, n, ms) =>
           println(f"  $ms%6d ms  $n%3d jobs  $s")
         }
-      // attribute thread-pool (broadcast/subquery) jobs to the owning
-      // action: same spark.sql.execution.id, first real call site wins
-      val isPool = (s: String) => s.contains("CompletableFuture")
-      val owner = snap.filter(j => j.execId.nonEmpty && !isPool(j.site))
-        .sortBy(_.id)
-        .groupBy(_.execId).map { case (eid, js) => eid -> js.head.site }
-      println("-- rollup with broadcast jobs re-attributed by execution --")
+      // attribute child (broadcast/subquery/AQE stage) jobs to the
+      // owning action by the execution-id rule: a job that shares
+      // spark.sql.execution.id with an EARLIER job belongs to that
+      // execution's first job, whatever call site it reports
+      val owner = snap.filter(_.execId.nonEmpty)
+        .groupBy(_.execId).map { case (eid, js) => eid -> js.minBy(_.id) }
+      println("-- rollup with child jobs re-attributed by execution --")
       snap.map { j =>
-          if (isPool(j.site) && owner.contains(j.execId))
-            j.copy(site = owner(j.execId) + " [bcast]")
-          else j
+          owner.get(j.execId) match {
+            case Some(first) if first.id < j.id =>
+              j.copy(site = first.site + " [child]")
+            case _ => j
+          }
         }
         .groupBy(_.site).toSeq
         .map { case (s, js) => (s, js.size, js.map(_.ms).sum) }

@@ -89,73 +89,19 @@ import graft.ops.TextOps
   *   runMain graft.tools.LexIndex fsck <indexDir>
   *   runMain graft.tools.LexIndex contention <indexDir>
   *
-  * Every mutating command accepts `--keep-manifests N` (sets
-  * `spark.graft.keepManifests` for the session): the vacuum retention
-  * window external concurrent readers pin against ([[Artifacts]]),
-  * and `--vacuum-grace-ms MS` (the age below which vacuum presumes a
-  * never-referenced segment belongs to a live CONCURRENT writer —
-  * see the multi-writer contract in [[Artifacts]]'s object doc).
-  * `search`/`searchBatch --at V` is the TIME-TRAVEL read over that
-  * window: every artifact (postings, stats, tombstones, ...) resolves
-  * against retained manifest V, so the answer is the one the index
-  * served at that version — updates and deletes that came after are
-  * invisible, exactly (q300's full-corpus oracle through a
-  * post-delete index is the driver-checked proof).
+  * The lifecycle shells (`delete`, `compact`, `history`, `fsck`,
+  * `contention`, `export`, `--at`, the retention flags) are
+  * [[IndexLifecycle]]'s; this object supplies the lexical pieces.
   */
-object LexIndex {
+object LexIndex extends IndexLifecycle {
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-lexindex")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      args.headOption match {
-        case Some("build")   => build(spark, args.drop(1))
-        case Some("update")  => update(spark, args.drop(1))
-        case Some("delete")  => delete(spark, args.drop(1))
-        case Some("compact") => compact(spark, args.drop(1))
-        case Some("search") =>
-          search(spark, args.drop(1)).show(100, truncate = false)
-        case Some("searchBatch") =>
-          searchBatch(spark, args.drop(1)).show(100, truncate = false)
-        case Some("history") =>
-          history(spark, args.drop(1)).show(100, truncate = false)
-        case Some("export") => export(spark, args.drop(1))
-        case Some("fsck") =>
-          fsck(spark, args.drop(1)).show(100, truncate = false)
-        case Some("contention") =>
-          contention(spark, args.drop(1)).show(100, truncate = false)
-        case _ =>
-          sys.error("usage: LexIndex build|update|delete|compact|" +
-            "search|searchBatch|history|export|fsck|contention ...")
-      }
-    } finally spark.stop()
-  }
-
-  private def flagsOf(args: Array[String], from: Int): Map[String, String] =
-    args.drop(from).sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-
-  /** Working-state read: current manifest overridden by this
-    * command's PENDING (written, not yet committed) segments — stats
-    * rewrites must see the post-command state before the flip.
+  protected val cliName = "LexIndex"
+  protected val appName = "graft-lexindex"
+  protected val idDefault = "doc_id"
+  /** the docids artifact is the EVER-INGESTED manifest: every ingested
+    * id, including zero-token documents that never reach doclens
     */
-  private def rd(spark: SparkSession, idx: String, name: String,
-      pending: Map[String, Seq[String]]): DataFrame =
-    pending.get(name) match {
-      case Some(segs) => Artifacts.readSegs(spark, idx, name, segs)
-      case None       => Artifacts.read(spark, idx, name)
-    }
-
-  private def has(spark: SparkSession, idx: String, name: String,
-      pending: Map[String, Seq[String]]): Boolean =
-    pending.get(name).exists(_.nonEmpty) || Artifacts.exists(spark, idx, name)
+  protected val membership = "docids"
 
   /** The term-hash bucket expression — MUST match between build and
     * search (search derives each query term's bucket with the same
@@ -340,9 +286,7 @@ object LexIndex {
     val deltas = Map("postings" -> Seq(segP), "doclens" -> Seq(segD),
       "docids" -> Seq(segI))
     Artifacts.commitAppendsWithRetry(spark, idx, deltas,
-      finish = pend => pend + ("stats" ->
-        Seq(Artifacts.writeSegment(spark, idx, "stats",
-          statsFrame(spark, idx, pend)))),
+      finish = rederive(spark, idx, _),
       validateRebase = () => {
         val mine = Artifacts.readSegs(spark, idx, "docids", Seq(segI))
         val clash = Artifacts.read(spark, idx, "docids")
@@ -357,324 +301,85 @@ object LexIndex {
     nNew
   }
 
-  /** Per-version collection statistics over the RETAINED manifest
-    * chain: (version, n, toktot, avgdl) — each version's scalar stats
-    * artifact read through `Artifacts.withPinned`, so the row is
-    * exactly what a `search --at version` serves from. The lifecycle
-    * audit surface: q304's oracle re-derives every version's row in
-    * closed form from the corpus and the command sequence.
+  /** history: per-version collection statistics (n, toktot, avgdl) —
+    * each version's scalar stats artifact read through
+    * `Artifacts.withPinned`, so the row is exactly what a `search --at
+    * version` serves from. Every row is manifest + stats-footer
+    * metadata: `history` runs ZERO Spark jobs.
     */
-  def history(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: history <indexDir>")
-    val idx = args(0)
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
-    import spark.implicits._
-    // the layer-level version chain (bounded by the retention window)
-    // drives which snapshots get a stats row — with the round-18
-    // driver-side contention rollup below, `history` now runs ZERO
-    // Spark jobs: every row is manifest + stats-footer metadata
-    val chain = Artifacts.manifestVersions(spark, idx)
-    // starvation-risk columns (round 17): contention events that
-    // landed at each version + the worst lost-attempt count — in the
-    // audit an operator actually runs, not only under `contention`
-    val cont = Artifacts.contentionByVersion(spark, idx)
-    chain.map { v =>
-      val s0 = Artifacts.withPinned(spark, idx, v) {
-        Artifacts.collectKV(spark, idx, "stats")
-      }
-      val (ev, worst) = cont.getOrElse(v, (0L, 0L))
-      (v, s0("n"), s0("toktot"), s0("avgdl"), ev, worst)
-    }.toDF("version", "n", "toktot", "avgdl",
-      "contention_events", "max_lost_attempts")
+  protected val historyColumns = ("n", "toktot", "avgdl")
+  protected def historyStats(spark: SparkSession, idx: String,
+      chain: Seq[Long]): Long => (Long, Long, Long) = { v =>
+    val s0 = Artifacts.withPinned(spark, idx, v) {
+      Artifacts.collectKV(spark, idx, "stats")
+    }
+    (s0("n"), s0("toktot"), s0("avgdl"))
   }
 
-  /** Index INTEGRITY audit (`fsck <indexDir>`): one row per invariant
-    * the serving contract rests on, as (invariant, observed, expected) —
-    * a healthy index reads observed == expected on every row.
+  /** fsck, lexical arm:
     *
-    *   - segments_missing: manifest-listed segment dirs absent on
-    *     disk (the unrecoverable failure — a mis-sized vacuum grace
-    *     or external deletion).
+    *   - postings_dl_mismatch: posting rows whose denormalized dl
+    *     disagrees with the doclens artifact for that id;
+    *   - postings_tf_sum_mismatch: ids whose postings tf-sum != dl
+    *     (document length IS the sum of its term frequencies);
     *   - stats_n / stats_toktot: the scalar stats artifact vs a fresh
     *     recount of the live state (docids minus tombstones; doclens
     *     restricted to live ids) — BM25's collection statistics must
     *     equal what a from-scratch rebuild would compute (the q268/
     *     q271 equivalence, auditable without a rebuild).
-    *   - postings_dl_mismatch: posting rows whose denormalized dl
-    *     disagrees with the doclens artifact for that id.
-    *   - postings_tf_sum_mismatch: ids whose postings tf-sum != dl
-    *     (the tokenizer identity: document length IS the sum of its
-    *     term frequencies).
-    *
-    * The content checks run over ALL rows including tombstoned ones
-    * (postings and doclens carry dead rows symmetrically until a
-    * compact folds them out). q307 drives a full lifecycle and hashes
-    * every row against the closed-form corpus recount.
     */
-  /** Commit-contention telemetry, lexical arm — see
-    * [[IndexCorpus.contention]] for the operational contract (the two
-    * CLIs share [[Artifacts.contentionReport]]).
-    */
-  def contention(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: contention <indexDir>")
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, args(0))
-    Artifacts.contentionReport(spark, args(0))
-  }
-
-  def fsck(spark: SparkSession, args: Array[String])
-      : org.apache.spark.sql.DataFrame = {
-    require(args.length >= 1, "usage: fsck <indexDir>")
-    val idx = args(0)
-    GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
-    import spark.implicits._
-    val (_, missing) = Artifacts.segmentCheck(spark, idx)
-    // value checks read the content artifacts — uncomputable when the
-    // manifest references lost files, so they report (-1, 0) then and
-    // the segments_missing row carries the diagnosis
-    val valueRows: Seq[(String, Long, Long)] =
-      try {
-        val stats0 = Artifacts.collectKV(spark, idx, "stats")
-        val live = graft.Scratch.cache(liveIds(spark, idx, Map.empty))
-        val postings = graft.Scratch.cache(
-          Artifacts.read(spark, idx, "postings")
-            .select(col("id"), col("tf"), col("dl")))
-        val doclens = Artifacts.read(spark, idx, "doclens")
-          .select(col("id"), col("dl").as("dl_doc"))
-        // ALL FOUR audit scalars in ONE job (round 18): each invariant
-        // contributes a tagged branch to a single union-aggregate —
-        // the previous shape scheduled four separate count/sum jobs
-        // per fsck (live count, toktot sum, dl mismatch, tf-sum
-        // mismatch), each paying the job floor on the shared caches
-        val audit = live
-          .select(lit("n").as("inv"), lit(1L).as("v"))
-          .unionByName(Artifacts.read(spark, idx, "doclens")
-            .join(broadcast(live), Seq("id"), "left_semi")
-            .select(lit("tok").as("inv"), col("dl").as("v")))
-          .unionByName(postings.select(col("id"), col("dl")).distinct()
-            .join(doclens, Seq("id"), "left_outer")
-            .filter(col("dl_doc").isNull || col("dl") =!= col("dl_doc"))
-            .select(lit("dlm").as("inv"), lit(1L).as("v")))
-          .unionByName(postings
-            .groupBy(col("id"), col("dl"))
-            .agg(sum(col("tf")).as("tfsum"))
-            .filter(col("tfsum") =!= col("dl"))
-            .select(lit("tfs").as("inv"), lit(1L).as("v")))
-          .groupBy(col("inv")).agg(sum(col("v")).as("s"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        Seq(
-          ("postings_dl_mismatch", audit.getOrElse("dlm", 0L), 0L),
-          ("postings_tf_sum_mismatch", audit.getOrElse("tfs", 0L), 0L),
-          ("stats_n", stats0("n"), audit.getOrElse("n", 0L)),
-          ("stats_toktot", stats0("toktot"), audit.getOrElse("tok", 0L)))
-      } catch {
-        case _: Throwable if missing > 0 =>
-          Seq("postings_dl_mismatch", "postings_tf_sum_mismatch",
-            "stats_n", "stats_toktot").map((_, -1L, 0L))
-      }
-    // strands read the telemetry files alone — computable even when
-    // content artifacts are lost, so they sit outside the try
-    val strands = Artifacts.contentionStrands(spark, idx)
-    (("segments_missing", missing, 0L) +:
-      ("contention_strands", strands, 0L) +: valueRows)
-      .toDF("invariant", "observed", "expected")
-      .orderBy(col("invariant"))
-  }
-
-  /** Materialize a (possibly historical) snapshot as a brand-new
-    * standalone index: `export <src> <dst> [--at V]` — see
-    * [[Artifacts.exportSnapshot]]. The export then serves exactly as
-    * the source did at V (q305 proves a pre-delete export answers the
-    * full-corpus oracle), with no retention-window coupling to src.
-    */
-  def export(spark: SparkSession, args: Array[String]): Seq[(String, Long)] = {
-    require(args.length >= 2, "usage: export <srcIndexDir> <dstIndexDir> [--at V]")
-    val flags = flagsOf(args, 2)
-    GraftSession.tune(spark)
-    val res = Artifacts.exportSnapshot(spark, args(0), args(1),
-      flags.get("at").map(_.toLong))
-    refresh(spark, args(1))
-    res
-  }
-
-  /** Invalidate any cached plan that scans the index files. Every
-    * mutating command calls this after its commit: a search may have
-    * left a (query-scoped, not-yet-released) cached scan of the old
-    * file set in the session's CacheManager, and a later same-shaped
-    * plan would silently reuse it — reading superseded listings.
-    */
-  private def refresh(spark: SparkSession, idx: String): Unit =
-    spark.catalog.refreshByPath(idx)
-
-  /** Live doc ids = manifest minus tombstones, against the working
-    * state (`pending` overrides).
-    */
-  private def liveIds(spark: SparkSession, idx: String,
-      pending: Map[String, Seq[String]]): DataFrame = {
-    val all = rd(spark, idx, "docids", pending).select(col("id"))
-    if (has(spark, idx, "tombstones", pending))
-      all.join(rd(spark, idx, "tombstones", pending).select(col("id")),
-        Seq("id"), "left_anti")
-    else all
-  }
-
-  /** Retract documents from the index. Deletion is a TOMBSTONE, not a
-    * rewrite: the doc ids append to a `tombstones` artifact (O(deleted)
-    * cost — at 100 TB a delete wave must not repay the build) and the
-    * scalar stats rewrite from the surviving doclens, so n / avgdl are
-    * immediately exact. [[search]] anti-joins the tombstones before
-    * deriving df, which makes post-delete answers IDENTICAL to a fresh
-    * build over the surviving corpus — the q271 driver row proves it
-    * by hashing a post-delete search against the survivor-corpus
-    * oracle chain. Physical space comes back at the next [[compact]].
-    * Ids not present (or already deleted) are ignored; re-ingesting a
-    * tombstoned id via [[update]] is rejected because the docids
-    * manifest is EVER-INGESTED — neither delete nor compact ever
-    * removes an id from it (deletes are permanent retractions —
-    * redacted or opted-out documents must not resurface; LexIndexSpec
-    * exercises the resurrection rule both before and after compact).
-    */
-  def delete(spark: SparkSession, args: Array[String]): Seq[(String, Long)] = {
-    require(args.length >= 2, "usage: delete <indexDir> <ids.parquet> [flags]")
-    val (idx, in) = (args(0), args(1))
-    val flags = flagsOf(args, 2)
-    val idCol = flags.getOrElse("id", "doc_id")
-    GraftSession.tune(spark)
-    Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
-    // structural command: the whole derivation (dedup, stats recount)
-    // is against one snapshot — a commit landing in between makes it
-    // stale, so the publish CAS-fails and the derivation re-runs from
-    // the new state, bounded times (Artifacts.commitStructuralWithRetry)
-    var nDel = 0L
-    Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
-      val doomed = graft.Scratch.localCheckpoint(
-        spark.read.parquet(in).select(col(idCol).cast("long").as("id"))
-          .distinct()
-          .join(liveIds(spark, idx, Map()), Seq("id"), "left_semi"))
-      // counted write (round 17): the deleted-row count rides the
-      // tombstone write instead of a separate pre-write count job
-      val (segT, n, _) = Artifacts.writeSegmentCounted(
-        spark, idx, "tombstones", doomed)
-      nDel = n
-      var pend: Map[String, Seq[String]] = Map("tombstones" ->
-        (Artifacts.segmentsOf(spark, idx, "tombstones") :+ segT))
-      pend = Artifacts.withReplaced(spark, idx, pend, "stats",
-        statsFrame(spark, idx, pend))
-      Artifacts.merged(spark, idx, pend)
-    }
-    Artifacts.vacuum(spark, idx)
-    refresh(spark, idx)
-    Seq("deleted" -> nDel)
-  }
-
-  /** Fold the tombstones into the content files: rewrite postings and
-    * doclens without the deleted ids (an anti-join against the SMALL
-    * tombstone set — O(rewritten) join state, never a broadcast of
-    * the live ids), each rewritten segment replacing what it compacts
-    * via one atomic manifest flip — compact never overwrites the
-    * files it reads, so a crash at ANY point leaves the previous
-    * index serving byte-identically (LexIndexSpec's crash test drives
-    * the failpoint). What compact must NOT do is forget: the docids
-    * manifest keeps every ever-ingested id and the tombstones
-    * artifact survives (distinct) as the permanent retraction set —
-    * otherwise a post-compact [[update]] would re-admit a retracted
-    * id.
-    *
-    * Default (no flags) is a FULL compact: every content artifact
-    * consolidates to one segment. `--threshold <permille>` compacts
-    * INCREMENTALLY: a segment rewrites only when its tombstone-hit
-    * density (dead rows / rows) reaches the threshold; cold segments
-    * keep their files byte-identical (the spec asserts it), so a
-    * delete wave localized in recent appends costs the dirty
-    * segments, not a full-index rewrite. Answers are unchanged either
-    * way (search already honored the tombstones) — q272/q285 pin that
-    * against the same survivor-corpus oracle as q271.
-    */
-  def compact(spark: SparkSession, args: Array[String]): Seq[(String, Long)] =
-    compactImpl(spark, args, crashBeforeCommit = false)
-
-  /** `crashBeforeCommit` is the spec's failpoint: do all the segment
-    * writes, then throw instead of flipping the manifest — proving a
-    * mid-compact crash leaves the prior index state fully serving.
-    */
-  private[tools] def compactImpl(spark: SparkSession, args: Array[String],
-      crashBeforeCommit: Boolean): Seq[(String, Long)] = {
-    require(args.length >= 1, "usage: compact <indexDir> [flags]")
-    val idx = args(0)
-    val flags = flagsOf(args, 1)
-    val thresholdPm = flags.get("threshold").map(_.toLong)
-    GraftSession.tune(spark)
-    Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
-    refresh(spark, idx)
-    // structural command, DELTA-REBASE form (round 15): the
-    // corpus-sized consolidation derives ONCE, reading exactly the
-    // base manifest's segment lists; a commit landing mid-compact (a
-    // concurrent ingest wave, a delete) CAS-fails the publish and the
-    // retry merges the already-consolidated segments with the
-    // competitor's appends-since-base instead of re-deriving — one
-    // rewrite no matter how many append races are lost, with only the
-    // metadata-sized stats frame re-derived per attempt
-    // (Artifacts.commitRewriteWithDeltaRetry; a competing structural
-    // rewrite still surfaces as a conflict). The ingest-vs-compact
-    // race and the sustained-ingest storm tests drive this live.
-    val baseMap = Artifacts.currentManifest(spark, idx)
-      .map(_._2).getOrElse(Map.empty)
-    var pend = Map.empty[String, Seq[String]]
-    val written = Seq.newBuilder[(String, Long)]
-    val hasTomb = baseMap.get("tombstones").exists(_.nonEmpty)
-    val tomb =
-      if (hasTomb) Some(graft.Scratch.cache(
-        Artifacts.readSegs(spark, idx, "tombstones", baseMap("tombstones"))
-          .select(col("id")).distinct()))
-      else None
+  protected val fsckInvariants = Seq("postings_dl_mismatch",
+    "postings_tf_sum_mismatch", "stats_n", "stats_toktot")
+  protected def fsckValues(spark: SparkSession, idx: String)
+      : Seq[(Long, Long)] = {
     val stats0 = Artifacts.collectKV(spark, idx, "stats")
-    val buckets = stats0.getOrElse("buckets", 16L)
-
-    // content artifacts: postings/doclens filter the tombstones,
-    // docids merges UNFILTERED (the ever-ingested manifest must not
-    // forget). Full mode rewrites each to ONE segment; threshold mode
-    // rewrites only tombstone-dense segments and leaves cold ones
-    // ([[Artifacts.compactSegments]] — docids never rewrites
-    // incrementally: an unfiltered manifest merge buys nothing a
-    // delete wave needs back).
-    val plan: Seq[(String, Boolean, Option[Artifacts.Bucket])] =
-      thresholdPm match {
-      case None => Seq(
-        ("postings", true, Some(termBucket(buckets))),
-        ("doclens", true, None), ("docids", false, None))
-      case Some(_) => Seq(
-        ("postings", true, Some(termBucket(buckets))),
-        ("doclens", true, None))
-    }
-    plan.foreach { case (name, filtered, bucket) =>
-      Artifacts.compactSegments(spark, idx, name, tomb, thresholdPm,
-        filtered, bucket, baseSegs = Some(baseMap.getOrElse(name, Seq.empty)))
-        .foreach(segs => pend += name -> segs)
-    }
-    tomb.foreach { ts =>
-      pend = Artifacts.withReplaced(spark, idx, pend, "tombstones", ts)
-    }
-    if (crashBeforeCommit)
-      sys.error("injected crash: compact before manifest commit")
-    Artifacts.commitRewriteWithDeltaRetry(spark, idx, baseMap, pend,
-      finish = merged => merged + ("stats" ->
-        Seq(Artifacts.writeSegment(spark, idx, "stats",
-          statsFrame(spark, idx, merged)))))
-    Artifacts.vacuum(spark, idx)
-    refresh(spark, idx)
-    // post-compact per-artifact sizes from parquet FOOTERS (round 18,
-    // VERDICT item 3) — see IndexCorpus.compactImpl
-    pend.keys.toSeq.sorted.foreach { name =>
-      written += (name -> Artifacts.countRows(spark, idx, name))
-    }
-    written.result()
+    val live = graft.Scratch.cache(liveIds(spark, idx, Map.empty))
+    val postings = graft.Scratch.cache(
+      Artifacts.read(spark, idx, "postings")
+        .select(col("id"), col("tf"), col("dl")))
+    val doclens = Artifacts.read(spark, idx, "doclens")
+      .select(col("id"), col("dl").as("dl_doc"))
+    val a = audit(live
+      .select(lit("n").as("inv"), lit(1L).as("v"))
+      .unionByName(Artifacts.read(spark, idx, "doclens")
+        .join(broadcast(live), Seq("id"), "left_semi")
+        .select(lit("tok").as("inv"), col("dl").as("v")))
+      .unionByName(postings.select(col("id"), col("dl")).distinct()
+        .join(doclens, Seq("id"), "left_outer")
+        .filter(col("dl_doc").isNull || col("dl") =!= col("dl_doc"))
+        .select(lit("dlm").as("inv"), lit(1L).as("v")))
+      .unionByName(postings
+        .groupBy(col("id"), col("dl"))
+        .agg(sum(col("tf")).as("tfsum"))
+        .filter(col("tfsum") =!= col("dl"))
+        .select(lit("tfs").as("inv"), lit(1L).as("v"))))
+      .withDefaultValue(0L)
+    Seq((a("dlm"), 0L), (a("tfs"), 0L), (stats0("n"), a("n")),
+      (stats0("toktot"), a("tok")))
   }
+
+  /** compact, lexical arm: postings/doclens filter the tombstones;
+    * docids merges UNFILTERED (the ever-ingested manifest must not
+    * forget — otherwise a post-compact update would re-admit a
+    * retracted id) and only in full mode: an unfiltered manifest merge
+    * buys nothing a delete wave needs back.
+    */
+  protected def compactPlan(spark: SparkSession, idx: String,
+      thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])] = {
+    val buckets = Artifacts.collectKV(spark, idx, "stats")
+      .getOrElse("buckets", 16L)
+    Seq(("postings", true, Some(termBucket(buckets))),
+      ("doclens", true, None)) ++
+      (if (thresholdPm.isEmpty) Seq(("docids", false, None)) else Nil)
+  }
+
+  /** Every membership change rewrites the scalar stats from the
+    * working state, so n / avgdl are immediately exact.
+    */
+  override protected def rederive(spark: SparkSession, idx: String,
+      pend: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    pend + ("stats" -> Seq(Artifacts.writeSegment(spark, idx, "stats",
+      statsFrame(spark, idx, pend))))
 
   /** The scalar stats frame recomputed from the CURRENT live state
     * (pending overrides) — shared by build/update/delete/compact so n
@@ -726,11 +431,7 @@ object LexIndex {
     */
   def search(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 2, "usage: search <indexDir> <query> [flags]")
-    flagsOf(args, 2).get("at") match {
-      case Some(v) => // time-travel: resolve every artifact at manifest v
-        Artifacts.withPinned(spark, args(0), v.toLong)(searchImpl(spark, args))
-      case None => searchImpl(spark, args)
-    }
+    atVersion(spark, args, 2)(searchImpl(spark, args))
   }
 
   private def searchImpl(spark: SparkSession, args: Array[String]): DataFrame = {
@@ -765,12 +466,7 @@ object LexIndex {
         postingsAll.filter(col("tb").isin(tbs: _*))
       else postingsAll)
       .filter(col("t").isin(terms: _*))
-    val qPost = graft.Scratch.cache(
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        qPost0.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
-          Seq("id"), "left_anti")
-      else qPost0)
+    val qPost = graft.Scratch.cache(dropTombstoned(spark, idx, qPost0))
     val dfq = broadcast(qPost
       .groupBy(col("t")).agg(count(lit(1)).as("df"))
       .withColumn("idf",
@@ -821,12 +517,7 @@ object LexIndex {
   def searchBatch(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 2,
       "usage: searchBatch <indexDir> <queries.parquet> [flags]")
-    flagsOf(args, 2).get("at") match {
-      case Some(v) =>
-        Artifacts.withPinned(spark, args(0), v.toLong)(
-          searchBatchImpl(spark, args, None))
-      case None => searchBatchImpl(spark, args, None)
-    }
+    atVersion(spark, args, 2)(searchBatchImpl(spark, args, None))
   }
 
   /** [[searchBatch]] with the query frame passed DIRECTLY instead of
@@ -841,12 +532,7 @@ object LexIndex {
     require(args.length >= 1,
       "usage: searchBatchFrame <indexDir> [flags] + frame")
     val full = args.take(1) ++ Array("__query_frame__") ++ args.drop(1)
-    flagsOf(args, 1).get("at") match {
-      case Some(v) =>
-        Artifacts.withPinned(spark, args(0), v.toLong)(
-          searchBatchImpl(spark, full, Some(queries)))
-      case None => searchBatchImpl(spark, full, Some(queries))
-    }
+    atVersion(spark, args, 1)(searchBatchImpl(spark, full, Some(queries)))
   }
 
   private def searchBatchImpl(spark: SparkSession,
@@ -922,12 +608,7 @@ object LexIndex {
         termRows.map(_.getString(0)).toSeq: _*))
       else scanned0.join(broadcast(qTerms.select(col("t")).distinct()),
         Seq("t"), "left_semi")
-    val qPost = graft.Scratch.cache(
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        scanned.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
-          Seq("id"), "left_anti")
-      else scanned)
+    val qPost = graft.Scratch.cache(dropTombstoned(spark, idx, scanned))
     // df is a PER-TERM global — derived once from the restricted
     // lists, shared by every query that searched the term
     val dfq = qPost

@@ -100,6 +100,33 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(segC != segA && segC != segB)
   }
 
+  test("readSegs memo: a segment number vacuum freed and a later " +
+    "writer re-claimed reads the NEW segment's rows") {
+    import spark.implicits._
+    val idx = freshIdx()
+    def commitRows(segs: String*): Unit = {
+      Artifacts.commit(spark, idx, Map("rows" -> segs))
+      Artifacts.vacuum(spark, idx)
+    }
+    def values(): Seq[String] = Artifacts.read(spark, idx, "rows")
+      .select(col("v")).as[String].collect().toSeq.sorted
+    val seg0 = Artifacts.writeSegment(spark, idx, "rows",
+      Seq((0L, "base")).toDF("id", "v"))
+    commitRows(seg0)
+    val seg1 = Artifacts.writeSegment(spark, idx, "rows",
+      Seq((1L, "old")).toDF("id", "v"))
+    commitRows(seg0, seg1)
+    assert(values() == Seq("base", "old")) // memoizes (rows, [seg0, seg1])
+    // retract the highest segment: vacuum deletes it, freeing its number
+    commitRows(seg0)
+    assert(!new java.io.File(s"$idx/rows/$seg1").exists())
+    val seg2 = Artifacts.writeSegment(spark, idx, "rows",
+      Seq((2L, "new")).toDF("id", "v"))
+    assert(seg2 == seg1, s"vacuum did not free $seg1 (claimed $seg2)")
+    commitRows(seg0, seg2)
+    assert(values() == Seq("base", "new"))
+  }
+
   test("retention window >= 2: a reader pinned to the PREVIOUS " +
     "manifest keeps serving byte-identically through a later " +
     "commit + vacuum; window 1 reclaims it (single-writer contract)") {
@@ -1245,10 +1272,12 @@ class ArtifactsSpec extends AnyFunSuite {
       val segs = (0 until 12).map(i =>
         Artifacts.writeSegment(spark, idx, "rows",
           Seq((100L + i, s"s$i")).toDF("id", "v")))
-      var sleeps = 0L
+      // the sleeper runs on all 4 pool threads: a plain var would lose
+      // concurrent increments
+      val sleeps = new java.util.concurrent.atomic.AtomicLong()
       val prevSleeper = Artifacts.backoffSleeper
       Artifacts.backoffSleeper = ms => {
-        sleeps += 1; Thread.sleep(ms)
+        sleeps.incrementAndGet(); Thread.sleep(ms)
       }
       import java.util.concurrent.{CountDownLatch, Executors}
       val pool = Executors.newFixedThreadPool(4)
@@ -1276,7 +1305,7 @@ class ArtifactsSpec extends AnyFunSuite {
         "not all 12 storm commits landed")
       val lost = Artifacts.contentionReport(spark, idx)
         .agg(sum(col("lost_attempts"))).head().getLong(0)
-      (lost, sleeps)
+      (lost, sleeps.get())
     }
     // real races: compare best-of-2 per arm so one unlucky scheduling
     // window cannot flip the differential
@@ -1285,8 +1314,12 @@ class ArtifactsSpec extends AnyFunSuite {
     val lostZero = zeroRuns.map(_._1).min
     val lostJit = jitRuns.map(_._1).min
     assert(zeroRuns.forall(_._2 == 0L), "sleeper engaged at base 0")
-    assert(jitRuns.map(_._2).sum >= jitRuns.map(_._1).sum,
-      "lost jittered attempts did not engage the sleeper")
+    // every lost attempt backs off exactly once before its retry, and
+    // a jittered backoff is always >= 1 ms, so each sleep is a call
+    jitRuns.foreach { case (lost, sleeps) =>
+      assert(sleeps == lost,
+        s"$lost lost jittered attempts but $sleeps sleeper calls")
+    }
     assert(lostJit <= lostZero,
       s"backoff lost MORE attempts ($lostJit) than lockstep ($lostZero)")
   }

@@ -180,6 +180,21 @@ class IndexCorpusSpec extends AnyFunSuite {
     assert(healthy.values.forall { case (o, e) => o == e && o == 0L },
       s"healthy index failed fsck: $healthy")
 
+    // a manifest-listed segment dir vanishes: segments_missing carries
+    // the diagnosis and every content check reads (-1, 0)
+    val seg = Artifacts.segmentsOf(spark, idx, "assignments").head
+    val segDir = new java.io.File(s"$idx/assignments/$seg")
+    val moved = new java.io.File(s"$tmp/stash")
+    assert(segDir.renameTo(moved))
+    spark.catalog.refreshByPath(idx)
+    val lost = fsckMap()
+    assert(lost("segments_missing")._1 >= 1L, s"$lost")
+    assert(Seq("assignment_dupes", "codes_cell_mismatch",
+      "codes_incomplete", "codes_orphans").forall(lost(_) == (-1L, 0L)),
+      s"value rows not (-1, 0) with a segment lost: $lost")
+    assert(moved.renameTo(segDir)) // restore
+    spark.catalog.refreshByPath(idx)
+
     // corruption: append a DUPLICATE assignment for id 5 in a wrong
     // cell (also a cell mismatch for its codes), an assignment for an
     // id that has NO codes (incomplete), and a code row for a
